@@ -614,93 +614,3 @@ def ngram_novelty(docs: DataFrame, id_col: str = "doc_id",
         .withColumn("novelty_ratio",
                     F.round(F.col("n_novel") / F.col("n_grams"), 4)
                     + F.lit(0.0)))
-
-
-def dsir_importance_weights(docs: DataFrame, target,
-                            id_col: str = "doc_id",
-                            text_col: str = "text",
-                            n_buckets: int = 256,
-                            quant: int = 1_000_000) -> DataFrame:
-    """Hashed n-gram importance-resampling weights — DSIR (Xie et al.
-    2023, "Data Selection for Language Models via Importance
-    Resampling"): score every document by how much more likely its
-    features are under a TARGET domain's bag-of-hashed-ngrams model
-    than under the raw pool's, the standard pretraining-data
-    selection step between quality filtering and mixture planning.
-
-    ``target`` is a boolean Column splitting the corpus (e.g.
-    lang == 'en'); features are lowercased whitespace unigrams plus
-    adjacent bigrams, each md5-hashed into ``n_buckets`` buckets
-    (namespaced 'u|'/'b|' so the two n-gram orders cannot collide).
-    With add-1 smoothing the per-bucket log-likelihood ratio is
-
-        lam_b = ln( (c_T(b)+1)(N_R+B) / ((c_R(b)+1)(N_T+B)) )
-
-    — ONE engine-side ln over an exact integer rational, and each
-    (doc, bucket) contribution c·lam_b is floor-quantized to the
-    1e-6 integer grid BEFORE the per-doc sum (the unigram-KL
-    ln-portability rule), so weight_q is an exact BIGINT both
-    engines agree on and weight is one division.
-
-    Scale shape: one tokenize+explode pass (fan-out-parallelism
-    guard), ONE (doc, bucket)-grain aggregate, bucket stats are a
-    ≤n_buckets-row frame broadcast back — no doc×doc, no vocabulary-
-    sized shuffle (bucket hashing bounds the model at B rows
-    regardless of corpus size, which is DSIR's own point). Returns
-    (id, is_target, n_grams, weight_q, weight); docs with zero
-    features emit no row (no evidence either way).
-    """
-    from .text import ensure_fanout_parallelism, tokens_of
-    toks = F.filter(tokens_of(F.col(text_col)),
-                    lambda w: w != F.lit(""))
-    base = (docs.filter(F.col(text_col).isNotNull())
-            .select(F.col(id_col).alias("id"),
-                    target.alias("is_target"),
-                    toks.alias("__toks")))
-    base = ensure_fanout_parallelism(base)
-    uni = (base.select("id", "is_target",
-                       F.explode("__toks").alias("w"))
-           .select("id", "is_target",
-                   F.concat(F.lit("u|"), F.col("w")).alias("feat")))
-    n = F.size("__toks")
-    bigs = F.when(
-        n >= 2,
-        F.transform(F.sequence(F.lit(1), n - 1),
-                    lambda i: F.concat(
-                        F.element_at(F.col("__toks"), i), F.lit(" "),
-                        F.element_at(F.col("__toks"), i + 1)))
-    ).otherwise(F.array().cast("array<string>"))
-    big = (base.select("id", "is_target", F.explode(bigs).alias("bg"))
-           .select("id", "is_target",
-                   F.concat(F.lit("b|"), F.col("bg")).alias("feat")))
-    feats = uni.unionByName(big).select(
-        "id", "is_target",
-        F.conv(F.substring(F.md5("feat"), 1, 2), 16, 10)
-        .cast("int").alias("bucket"))
-    dbc = (feats.groupBy("id", "is_target", "bucket")
-           .agg(F.count(F.lit(1)).cast("long").alias("c")))
-    stats = (dbc.groupBy("bucket")
-             .agg(F.sum(F.when(F.col("is_target"), F.col("c"))
-                        .otherwise(F.lit(0))).alias("ct"),
-                  F.sum(F.when(~F.col("is_target"), F.col("c"))
-                        .otherwise(F.lit(0))).alias("cr")))
-    tot = stats.agg(F.sum("ct").alias("nt"), F.sum("cr").alias("nr"))
-    b = F.lit(n_buckets)
-    lam = (stats.crossJoin(F.broadcast(tot))
-           .select("bucket",
-                   F.log(((F.col("ct") + 1) * (F.col("nr") + b))
-                         .cast("double")
-                         / ((F.col("cr") + 1) * (F.col("nt") + b))
-                         .cast("double")).alias("lam")))
-    q = (dbc.join(F.broadcast(lam), "bucket")
-         .select("id", "is_target", "c",
-                 F.floor(F.col("c").cast("double") * F.col("lam")
-                         * F.lit(float(quant))).cast("long")
-                 .alias("q")))
-    return (q.groupBy("id", "is_target")
-            .agg(F.sum("c").cast("long").alias("n_grams"),
-                 F.sum("q").cast("long").alias("weight_q"))
-            .select(F.col("id").alias(id_col), "is_target", "n_grams",
-                    "weight_q",
-                    (F.col("weight_q").cast("double")
-                     / F.lit(float(quant))).alias("weight")))

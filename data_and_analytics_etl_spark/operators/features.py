@@ -461,70 +461,3 @@ def quantile_normalize(df: DataFrame, feature_col: str, value_col: str,
                     (F.col("sum_v").cast("double")
                      / F.col("n_features").cast("double")).alias("norm"))
             .orderBy("rank"))
-
-
-def best_gini_splits(df: DataFrame, feature_col: str = "feature",
-                     value_col: str = "v",
-                     label_col: str = "y") -> DataFrame:
-    """Best binary split per feature by Gini impurity — the CART
-    node-building primitive (Breiman et al. '84), run relationally
-    over a long-format (feature, bucketized value, 0/1 label) frame:
-    exactly what a distributed tree learner evaluates at each node,
-    and a supervised sharpening of the feature-ranking family
-    (woe_iv, chi2, mutual information) from correlation to an
-    actionable threshold.
-
-    For a candidate threshold t of feature f (left: v ≤ t, right:
-    v > t), minimizing weighted Gini
-
-        n_L·G_L + n_R·G_R,  G = 1 − Σ_k (c_k/n)²
-
-    is equivalent to MAXIMIZING  score = S_L/n_L + S_R/n_R  with
-    S = pos² + neg² — so per-candidate stats stay EXACT integers
-    (cumulative counts via one bounded per-feature window over the
-    (feature, value)-grain aggregate), and score is ONE double
-    division of exact products (S·n ≤ n³ stays under 2^63 through
-    sf1-scale inputs). Both engines compute bit-identical score
-    doubles, so the argmax (score DESC, threshold ASC) is
-    deterministic cross-engine. The degenerate all-left split is
-    excluded (n_R = 0).
-
-    Scale shape: ONE (feature, value) hash aggregate over the data
-    (map-side combinable), everything after runs at candidate grain
-    — features × distinct buckets, bounded by the caller's
-    quantization, never data-sized. Returns one row per feature:
-    (feature, threshold, n_left, pos_left, n_right, pos_right,
-    score, gini) where gini is the weighted impurity of the chosen
-    split.
-    """
-    agg = (df.groupBy(feature_col, value_col)
-           .agg(F.count(F.lit(1)).cast("long").alias("cnt"),
-                F.sum(label_col).cast("long").alias("pos")))
-    wc = (Window.partitionBy(feature_col).orderBy(value_col)
-          .rowsBetween(Window.unboundedPreceding, 0))
-    tot = (agg.groupBy(feature_col)
-           .agg(F.sum("cnt").cast("long").alias("n"),
-                F.sum("pos").cast("long").alias("p")))
-    cum = (agg.select(feature_col, value_col,
-                      F.sum("cnt").over(wc).cast("long").alias("nl"),
-                      F.sum("pos").over(wc).cast("long").alias("pl"))
-           .join(F.broadcast(tot), feature_col)
-           .filter(F.col("nl") < F.col("n")))
-    nr = F.col("n") - F.col("nl")
-    pr = F.col("p") - F.col("pl")
-    sl = (F.col("pl") * F.col("pl")
-          + (F.col("nl") - F.col("pl")) * (F.col("nl") - F.col("pl")))
-    sr = pr * pr + (nr - pr) * (nr - pr)
-    score = ((sl * nr + sr * F.col("nl")).cast("double")
-             / (F.col("nl") * nr).cast("double"))
-    scored = cum.select(
-        feature_col, F.col(value_col).alias("threshold"),
-        F.col("nl").alias("n_left"), F.col("pl").alias("pos_left"),
-        nr.alias("n_right"), pr.alias("pos_right"),
-        score.alias("score"),
-        ((F.col("n").cast("double") - score)
-         / F.col("n").cast("double")).alias("gini"))
-    wb = Window.partitionBy(feature_col).orderBy(
-        F.desc("score"), F.asc("threshold"))
-    return (scored.withColumn("__rk", F.row_number().over(wb))
-            .filter(F.col("__rk") == 1).drop("__rk"))

@@ -68,7 +68,6 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     base = (nodes.join(outdeg, nodes.node == outdeg.src, "left")
             .select("node", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
             .persist(StorageLevel.MEMORY_AND_DISK))
-    n = base.count()  # one bounded action to size the teleport term
 
     def checkpoint_with_dang(frame: DataFrame) -> tuple[DataFrame, float]:
         # Dangling mass rides the round's own checkpoint via observe()
@@ -90,26 +89,32 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         val = obs.get["dang"]
         return out, float(val) if val is not None else 0.0
 
-    ranks, dang = checkpoint_with_dang(
-        base.select("node", "outdeg", F.lit(1.0 / n).alias("rank")))
+    try:
+        n = base.count()  # one bounded action to size the teleport term
+        ranks, dang = checkpoint_with_dang(
+            base.select("node", "outdeg", F.lit(1.0 / n).alias("rank")))
 
-    for _ in range(iters):
-        contrib = (ranks.filter(F.col("outdeg") > 0)
-                   .join(e, ranks.node == e.src)
-                   .select(F.col("dst").alias("node"),
-                           (F.col("rank") / F.col("outdeg"))
-                           .alias("__c"))
-                   .groupBy("node")
-                   .agg(F.sum("__c").alias("__in")))
-        upd = (base.join(contrib, "node", "left")
-               .select("node", "outdeg",
-                       (F.lit((1.0 - damping) / n)
-                        + F.lit(damping * dang / n)
-                        + F.lit(damping)
-                        * F.coalesce(F.col("__in"), F.lit(0.0)))
-                       .alias("rank")))
-        ranks, dang = checkpoint_with_dang(upd)
-    e.unpersist()
+        for _ in range(iters):
+            contrib = (ranks.filter(F.col("outdeg") > 0)
+                       .join(e, ranks.node == e.src)
+                       .select(F.col("dst").alias("node"),
+                               (F.col("rank") / F.col("outdeg"))
+                               .alias("__c"))
+                       .groupBy("node")
+                       .agg(F.sum("__c").alias("__in")))
+            upd = (base.join(contrib, "node", "left")
+                   .select("node", "outdeg",
+                           (F.lit((1.0 - damping) / n)
+                            + F.lit(damping * dang / n)
+                            + F.lit(damping)
+                            * F.coalesce(F.col("__in"), F.lit(0.0)))
+                           .alias("rank")))
+            ranks, dang = checkpoint_with_dang(upd)
+    finally:
+        # ranks are checkpoint-materialized every round, so both caches
+        # are free on every exit path
+        e.unpersist()
+        base.unpersist()
     return ranks.select("node", "rank")
 
 
@@ -804,7 +809,8 @@ def local_clustering_by_degree(edges: DataFrame, src: str = "src",
     # set — recomputes per consumer at scale (Catalyst copies the
     # subtree; the copies' exchanges are not identical, so AQE
     # ReuseExchange cannot collapse them all). Interleaved A/B
-    # (scripts/ab_lcc_persist.py): sf1 decade 27.1 -> 9.8 s (-64%);
+    # (OPTIMIZATION_r14.md "V4 — the 13-15 s graph registry rows"):
+    # sf1 decade 27.1 -> 9.8 s (-64%);
     # sf0.1 pays ~0.7 s of cache fill on a 3-4 s probe — the scale
     # call per guide §5 (reused AND recompute-expensive).
     o = ed.select(
@@ -1152,87 +1158,3 @@ def hyperball_neighborhood(edges: DataFrame, src: str = "src",
                     F.col("effective_radius").cast("long")
                     .alias("effective_radius"))
             .orderBy("r"))
-
-
-def strongly_connected_components(edges: DataFrame, src: str = "src",
-                                  dst: str = "dst",
-                                  max_depth: int = 16) -> DataFrame:
-    """Strongly connected components of a directed graph whose
-    shortest-path horizon is bounded by ``max_depth`` — the directed
-    counterpart of dedup.py's (undirected) connected components, and
-    the canonical condensation step before any DAG analytics
-    (cycle-safe topological rollups, dependency ordering).
-
-    Definition applied literally: u and v share an SCC iff u ⇝ v AND
-    v ⇝ u. The operator computes the bounded reachability closure
-    once (:func:`transitive_closure` — O(log depth) min-plus doubling
-    rounds, bucketed equi-joins, never node×node), adds the identity
-    pairs (every node reaches itself trivially), and intersects the
-    pair set with its own transpose via ONE left-semi equi-join on
-    (node, anc) — set intersection, no new shuffle shape. The SCC id
-    is the MINIMUM mutually-reachable node (deterministic canonical
-    label, the dedup_clusters min-label convention); component sizes
-    ride one more id-grain aggregate.
-
-    ``max_depth`` is a CONTRACT, not a tuning knob. The result is
-    the EXACT SCC partition whenever ``max_depth`` covers the
-    graph's directed reachability diameter (then mutual-within-
-    horizon ≡ mutual, which is transitive). Below that, semantics
-    degrade honestly but measurably: u is labeled with the minimum
-    node whose BOTH directed shortest paths to/from u fit in the
-    horizon — so a cycle of length L is grouped fully when
-    L ≤ max_depth, grouped only among nodes with
-    (Δ mod L) ∈ [L − max_depth, max_depth] when
-    max_depth < L ≤ 2·max_depth (mutual-within-horizon is NOT
-    transitive there, so labels are a bounded-horizon RELATION
-    summary, not an equivalence partition), and all-singletons when
-    L > 2·max_depth (one direction always overflows). All three
-    regimes are pytest-pinned; callers size the horizon the way
-    transitive_closure callers model hierarchy depth.
-
-    ADVERSARIAL-TOPOLOGY BOUND: cost is the closure's O(reachable
-    pairs) — for dense digraphs where that explodes, bound the probe
-    subgraph at registration (the SCALE.md Round-12 §1 budget rule)
-    or use transitive_closure's ``max_pairs_per_node`` degradation;
-    a label-forwarding SCC (FW-BW / Stergiou-style min-label rounds)
-    is the documented upgrade path if a nodes×16-state variant is
-    ever needed — it composes on _minplus_doubling exactly like
-    hyperball_neighborhood does for the diameter family.
-
-    Returns (node, scc_id, scc_size), one row per node appearing on
-    either side of an edge.
-    """
-    closure = transitive_closure(edges, src=src, dst=dst,
-                                 max_depth=max_depth)
-    nodes = (edges.select(F.col(src).alias("node"))
-             .unionAll(edges.select(F.col(dst).alias("node")))
-             .distinct())
-    # EAGER lineage cut at the fan-out point (the hyperball
-    # analyzer-blowup class, tests/test_construction_purity.py
-    # ledger): the doubling loop's logical tree holds 3^rounds seed
-    # copies (union + self-join×2 per round), and reach feeds the
-    # semi-join twice and the size join transitively twice more — a
-    # lazy persist leaves a ~4·3^rounds-node plan that costs tens of
-    # seconds of analyzer/CacheManager time per action (measured:
-    # 41 s flat at BOTH sf0.001 and sf0.01 — pure plan overhead,
-    # zero data dependence; ~7 s warm after this cut plus the probe-
-    # side edge-list cut, ~1.5x the b16 closure probe in the same
-    # harness). localCheckpoint analyzes the closure subtree ONCE
-    # and downstream plans start from a flat LogicalRDD.
-    reach = (closure.select("node", "anc")
-             .unionByName(nodes.select("node",
-                                       F.col("node").alias("anc")))
-             .distinct()
-             .localCheckpoint(eager=True))
-    # (u,v) mutual ⟺ (u,v) ∈ reach ∧ (v,u) ∈ reach: intersect reach
-    # with its transpose — a left-semi join IS set intersection here.
-    mutual = reach.join(
-        reach.select(F.col("anc").alias("node"),
-                     F.col("node").alias("anc")),
-        ["node", "anc"], "left_semi")
-    scc = (mutual.groupBy("node").agg(F.min("anc").alias("scc_id"))
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    sizes = scc.groupBy("scc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("scc_size"))
-    return (scc.join(sizes, "scc_id")
-            .select("node", "scc_id", "scc_size"))

@@ -55,94 +55,6 @@ def cosine_prenormed(a: Column, b: Column, norm_a: Column,
     return dot(a, b) / (norm_a * norm_b)
 
 
-#: _partition_topk buffers at most this many rows before an
-#: intermediate compaction (memory bound per task; tests shrink it to
-#: exercise the cascaded-compaction path on small data).
-PARTITION_TOPK_COMPACT_ROWS = 131_072
-
-
-def _partition_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Bounded map-side partial top-k before the exact rank window.
-
-    UNWIRED — a measured negative result, kept with its tests (r14).
-    Spark 4's rank-limit pushdown (SPARK-37099) already plans
-    ``WindowGroupLimit ... Partial`` below the window's exchange, so
-    the shuffle is bounded in the JVM and this Arrow stage only adds a
-    Python-boundary pass over every scored pair (A/B at sf0.1: bench
-    shape 0.41 vs 0.20 s, 4M-pair substrate 1.68 vs 1.26 s). It would
-    become relevant only on an engine without rank-limit pushdown.
-
-    ``scored`` is the (probe_id, vec_id, cosine) pair stream. This
-    pass runs per input partition (``mapInArrow``, no exchange) and
-    keeps, per (partition, probe), every row whose cosine is >= the
-    k-th largest cosine of that partition-probe group, so the window's
-    shuffle input shrinks to <= |probes| · k · partitions rows
-    (+ ties) — a ~|corpus|/k cut.
-
-    Output-identity proof: the window ranks by (cosine DESC NULLS
-    LAST, vec_id ASC) and keeps rank <= k. If a row is in a probe's
-    GLOBAL top-k, fewer than k rows of the whole pair set precede it
-    in that order, so fewer than k rows of its OWN partition do — it
-    survives any per-partition top-k taken under the same order. The
-    selection here is deliberately MORE liberal than the window's
-    order, so it cannot depend on tie-break or NaN subtleties:
-
-    - ties on cosine are all kept (threshold rule, no vec_id compare);
-    - NaN sorts as +inf (Spark orders NaN greatest — above Infinity;
-      collapsing the two only ever keeps extra rows);
-    - NULL sorts as -inf (DESC NULLS LAST: a null row outranked by
-      >= k non-null rows in its partition is outranked by them
-      globally, so dropping it is safe; collapsing NULL with a real
-      -inf cosine again only keeps extra rows).
-
-    Values pass through untouched (``Table.take`` on the input Arrow
-    buffers — no pandas round-trip that would corrupt null vs NaN), so
-    the rows the window emits are byte-identical to the unfiltered
-    plan's.
-    """
-    schema = scored.schema
-    compact_rows = PARTITION_TOPK_COMPACT_ROWS
-
-    def select_topk(batches):
-        import numpy as np
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        def compact(tbl: "pa.Table") -> "pa.Table":
-            cos = tbl.column("cosine")
-            null_mask = pc.is_null(cos).to_numpy(zero_copy_only=False)
-            key = cos.to_numpy(zero_copy_only=False).astype(
-                np.float64, copy=True)           # nulls arrive as NaN
-            nan_mask = np.isnan(key) & ~null_mask
-            key[null_mask] = -np.inf
-            key[nan_mask] = np.inf
-            codes, _ = pd.factorize(
-                tbl.column("probe_id").to_numpy(zero_copy_only=False))
-            order = np.lexsort((-key, codes))    # probe, then key desc
-            sc, sk = codes[order], key[order]
-            starts = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
-            sizes = np.diff(np.r_[starts, sc.size])
-            thresh = sk[starts + np.minimum(k - 1, sizes - 1)]
-            keep = sk >= np.repeat(thresh, sizes)
-            return tbl.take(np.sort(order[keep]))
-
-        # Incremental compaction bounds memory to O(kept + batch);
-        # cascaded compaction is sound because a global-top-k row
-        # survives every intermediate pass (docstring proof applies to
-        # each compact over the rows it sees).
-        kept = None
-        for batch in batches:
-            t = pa.Table.from_batches([batch])
-            kept = t if kept is None else pa.concat_tables([kept, t])
-            if kept.num_rows >= compact_rows:
-                kept = compact(kept)
-        if kept is not None and kept.num_rows:
-            yield from compact(kept).combine_chunks().to_batches()
-
-    return scored.mapInArrow(select_topk, schema)
-
-
 def cosine_topk(corpus: DataFrame, probes: DataFrame, k: int,
                 id_col: str = "vec_id", vec_col: str = "embedding",
                 ) -> DataFrame:
@@ -191,12 +103,13 @@ def cosine_topk(corpus: DataFrame, probes: DataFrame, k: int,
     # plans `WindowGroupLimit ... Partial` BELOW the probe_id exchange
     # for this rank<=k filter — the shuffle into the window carries
     # <= |probes| * k * partitions rows in the JVM, with no Python
-    # boundary. The mapInArrow form (:func:`_partition_topk`) was
-    # built, proven output-identical, and A/B-measured SLOWER (bench
-    # shape 0.41 vs 0.20 s; 4M-pair substrate 1.68 vs 1.26 s at
-    # sf0.1): it pays an Arrow round-trip of every scored pair to
-    # duplicate a reduction the engine already does. Kept unwired as
-    # the documented negative result (tests pin its correctness).
+    # boundary. A mapInArrow per-partition top-k was built, proven
+    # output-identical, and A/B-measured SLOWER (bench shape 0.41 vs
+    # 0.20 s; 4M-pair substrate 1.68 vs 1.26 s at sf0.1): it pays an
+    # Arrow round-trip of every scored pair to duplicate a reduction
+    # the engine already does — OPTIMIZATION_r14.md "V1" and "A/B: b6
+    # partial top-k". test_cosine_topk_shuffle_is_rank_limit_bounded
+    # pins the engine-side bound this decision rests on.
     w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)

@@ -32,7 +32,7 @@ property test, not an oracle (the bound is probabilistic).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 
 
 def _buckets(key: Column, depth: int, width: int,
@@ -267,154 +267,3 @@ def heavy_hitters(df: DataFrame, key_col: str, phi_num: int = 1,
             .select(F.col("__k").alias("key"),
                     F.col("cnt").cast("long").alias("cnt"))
             .orderBy(F.desc("cnt"), "key"))
-
-
-# --- KMV / theta sketches: mergeable distinct counting + set algebra -------
-
-#: Hash space size for the 12-hex-digit md5 prefix: 16^12 = 2^48.
-#: Exact in double, and division by it is exact (power of two), so
-#: every normalized hash value is a DYADIC rational — the property
-#: that makes a KMV estimate hash-checkable cross-engine at all (the
-#: HyperBall dyadic-sum rule, round-13 verify notes).
-KMV_SPACE = float(1 << 48)
-
-
-def kmv_hash(value: Column) -> Column:
-    """Uniform deterministic hash of ``value`` into (0, 1].
-
-    md5 of the string rendering, first 12 hex digits parsed as a
-    48-bit integer v, normalized as (v + 1) / 2^48 — v + 1 ≤ 2^48 is
-    exactly representable and the division is exact, so the result is
-    bit-identical in any IEEE engine (DuckDB twin: the per-character
-    hex fold, queries/round14.py). +1 keeps 0 out of the range so a
-    k-th value of 0 can never divide-by-zero an estimate.
-    """
-    v = F.conv(F.substring(F.md5(value.cast("string")), 1, 12),
-               16, 10).cast("long")
-    return (v + F.lit(1)).cast("double") / F.lit(KMV_SPACE)
-
-
-def kmv_build(df: DataFrame, group_cols: list[str], value_col: str,
-              k: int = 64, salt_buckets: int = 32) -> DataFrame:
-    """Per-group KMV (bottom-k / theta) sketch: the ``k`` smallest
-    distinct hash values of the group's elements — the classic
-    mergeable distinct-count sketch of Beyer et al. (SIGMOD'07) and
-    the order-statistics half of the theta-sketch family.
-
-    Scale shape: one distinct at (group, hash) grain, then TWO-PHASE
-    bottom-k — phase 1 ranks within (group, salt) where salt is a
-    deterministic function of the hash value itself (pmod of its
-    2^20 grid cell), so few-group inputs still sort in
-    ``salt_buckets``-way parallel slices; phase 2 ranks the ≤
-    salt_buckets·k survivors per group. No group ever funnels its
-    full element set through one task, and the result is identical
-    to a single global rank because a group's k smallest hashes are
-    a subset of the union of its per-salt k smallest.
-
-    Returns (group_cols..., hv, rn) with rn in 1..k ascending by hv.
-    Distinct HASHES, not distinct values, are ranked (a 48-bit
-    collision merges two elements — negligible for estimation and
-    deterministic on both engines, the md5-twin convention).
-    """
-    h = (df.select(*[F.col(c) for c in group_cols],
-                   kmv_hash(F.col(value_col)).alias("hv"))
-         .distinct())
-    salt = F.pmod(F.floor(F.col("hv") * F.lit(float(1 << 20)))
-                  .cast("long"), F.lit(salt_buckets))
-    w1 = Window.partitionBy(*group_cols, "__salt").orderBy("hv")
-    pre = (h.withColumn("__salt", salt)
-           .withColumn("__rn", F.row_number().over(w1))
-           .filter(F.col("__rn") <= k)
-           .drop("__rn", "__salt"))
-    w2 = Window.partitionBy(*group_cols).orderBy("hv")
-    return (pre.withColumn("rn", F.row_number().over(w2))
-            .filter(F.col("rn") <= k))
-
-
-def kmv_merge(sketches: DataFrame, group_cols: list[str],
-              k: int = 64) -> DataFrame:
-    """Merge KMV sketch rows (e.g. after re-mapping groups or
-    unioning per-partition sketches): distinct hashes, re-rank, keep
-    the k smallest per group. EXACT merge — the k smallest of a
-    union of bottom-k sets equals the k smallest of the union of the
-    underlying sets (any union-wide bottom-k hash is bottom-k within
-    its own side), which is the KMV merge law the property suite
-    pins against a from-scratch rebuild.
-    """
-    h = (sketches.select(*[F.col(c) for c in group_cols], "hv")
-         .distinct())
-    w = Window.partitionBy(*group_cols).orderBy("hv")
-    return (h.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k))
-
-
-def kmv_set_ops(sketches: DataFrame, group_col: str,
-                k: int = 64) -> DataFrame:
-    """Union / intersection / difference cardinality estimates for
-    EVERY unordered group pair, from per-group KMV sketches alone —
-    the theta-sketch set algebra (Beyer et al. '07; Dasgupta et al.
-    'Theta Sketch Framework').
-
-    Per pair (a < b): merge the two ≤k-row sketches, rank, take the
-    k smallest union hashes; theta = the k-th; then
-      union_est = (k-1)/theta                  (KMV estimator)
-      inter_est = ci/k · union_est             (ci = union-sketch
-                                                hashes present in
-                                                BOTH sides)
-      a_not_b_est / b_not_a_est                (same, one-sided)
-    Membership via the sides' sketches is exact for every union-
-    sketch hash: h ≤ theta_union ≤ theta_side, so h ∈ side ⟺ h ∈
-    side's bottom-k. Estimates are fixed IEEE chains over dyadic
-    inputs (one divide, one multiply-divide with k a power of two) —
-    bit-portable, no rounding step.
-
-    Everything is sketch-grain: pairs × 2k rows regardless of data
-    size; the pair table itself is a broadcast self-join of the
-    bounded distinct-group frame (callers own the #groups² bound,
-    the cms/hll sketch-grain convention). Pairs whose merged sketch
-    holds fewer than k hashes emit NULL estimates (the honest "not
-    enough evidence" answer — both engines agree on it).
-
-    Returns (ga, gb, theta, n_union_sketch, ci, ca_only, cb_only,
-    union_est, inter_est, a_not_b_est, b_not_a_est).
-    """
-    gs = sketches.select(F.col(group_col).alias("g")).distinct()
-    pairs = (gs.select(F.col("g").alias("ga"))
-             .join(F.broadcast(gs.select(F.col("g").alias("gb"))),
-                   F.col("ga") < F.col("gb")))
-    sk = sketches.select(F.col(group_col).alias("g"), "hv")
-    side_a = (pairs.join(sk, F.col("ga") == F.col("g"))
-              .select("ga", "gb", "hv", F.lit(1).alias("in_a"),
-                      F.lit(0).alias("in_b")))
-    side_b = (pairs.join(sk, F.col("gb") == F.col("g"))
-              .select("ga", "gb", "hv", F.lit(0).alias("in_a"),
-                      F.lit(1).alias("in_b")))
-    tag = (side_a.unionByName(side_b)
-           .groupBy("ga", "gb", "hv")
-           .agg(F.max("in_a").alias("in_a"),
-                F.max("in_b").alias("in_b")))
-    w = Window.partitionBy("ga", "gb").orderBy("hv")
-    u = (tag.withColumn("rn", F.row_number().over(w))
-         .filter(F.col("rn") <= k))
-    agg = (u.groupBy("ga", "gb")
-           .agg(F.max(F.when(F.col("rn") == k, F.col("hv")))
-                .alias("theta"),
-                F.count(F.lit(1)).cast("long").alias("n_union_sketch"),
-                F.sum(F.col("in_a") * F.col("in_b")).cast("long")
-                .alias("ci"),
-                F.sum(F.col("in_a") * (1 - F.col("in_b")))
-                .cast("long").alias("ca_only"),
-                F.sum((1 - F.col("in_a")) * F.col("in_b"))
-                .cast("long").alias("cb_only")))
-    union_est = F.lit(float(k - 1)) / F.col("theta")
-    kd = F.lit(float(k))
-    return agg.select(
-        "ga", "gb", "theta", "n_union_sketch", "ci", "ca_only",
-        "cb_only",
-        union_est.alias("union_est"),
-        (F.col("ci").cast("double") * union_est / kd)
-        .alias("inter_est"),
-        (F.col("ca_only").cast("double") * union_est / kd)
-        .alias("a_not_b_est"),
-        (F.col("cb_only").cast("double") * union_est / kd)
-        .alias("b_not_a_est"))

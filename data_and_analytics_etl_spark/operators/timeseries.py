@@ -1130,71 +1130,3 @@ def theil_sen_slope(df: DataFrame, group_col: str, t_col: str,
                     F.col("n_points").cast("long").alias("n_points"),
                     "n_pairs", "sen_slope")
             .orderBy(group_col))
-
-
-def dtw_band_distance(a: Column, b: Column, n: int, band: int = 2,
-                      inf: int = 1 << 50) -> Column:
-    """Sakoe-Chiba-banded Dynamic Time Warping distance between two
-    fixed-length INTEGER series columns — the standard elastic
-    similarity for daily-shape comparison (Sakoe & Chiba '78; Lin et
-    al.'s SAX work downsamples for indexing, DTW measures the actual
-    alignment cost).
-
-    Pure-expression anti-diagonal DP, entirely inside whole-stage
-    codegen — no UDF, no driver loop: the DP matrix D[i][j] =
-    |a_i − b_j| + min(D[i−1][j], D[i][j−1], D[i−1][j−1]) is evaluated
-    diagonal-by-diagonal (cells on anti-diagonal d depend only on
-    d−1 and d−2), so one F.aggregate fold over d = 0..2n−2 carrying
-    TWO length-n arrays computes the whole band. Out-of-band and
-    out-of-grid cells pin to an ``inf`` sentinel; every in-band cell
-    keeps a finite in-band predecessor (the diagonal predecessor is
-    band-closed), and ``least(v, inf)`` stops sentinel drift, so the
-    result is exact integer min-plus arithmetic — hash-portable with
-    no float anywhere. The DuckDB twin replays the identical fold as
-    a recursive CTE over d (queries/round14.py).
-
-    ``a``/``b`` must be length-``n`` array<long> columns (callers
-    quantize to cents first — the sax_encode contract). Cost scale:
-    path length ≤ 2n−1 cells of |Δcents| keeps any realistic series
-    far below the 2^50 sentinel. O(n²) work per row as n·(2n−1)
-    codegen ops — for n beyond a few hundred, switch to a
-    mapInPandas batch kernel (the multimodal tradeoff), not bigger
-    expressions.
-    """
-    INF = F.lit(inf)
-    idx = F.sequence(F.lit(0), F.lit(n - 1))
-    init = F.struct(
-        F.transform(idx, lambda i: INF).alias("p2"),
-        F.transform(idx, lambda i: INF).alias("p1"))
-
-    def step(acc, d):
-        p1 = acc.getField("p1")
-        p2 = acc.getField("p2")
-
-        def cell(i):
-            j = d - i
-            in_band = ((F.abs(i * 2 - d) <= F.lit(band))
-                       & (i <= d) & (j <= F.lit(n - 1)))
-            cost = F.abs(F.element_at(a, i + 1)
-                         - F.element_at(b, j + 1))
-            # element_at is 1-based and RAISES on 0 even with ANSI
-            # off; when() does not short-circuit — clamp the index
-            # and let the guard mask the value (the ranking-metrics
-            # rule, r6 notes)
-            safe_i = F.greatest(F.lit(1), i)
-            up = F.when(i >= 1, F.element_at(p1, safe_i)).otherwise(INF)
-            left = F.element_at(p1, i + 1)
-            diag = F.when(i >= 1,
-                          F.element_at(p2, safe_i)).otherwise(INF)
-            mn = F.when((d == F.lit(0)) & (i == F.lit(0)),
-                        F.lit(0)).otherwise(F.least(up, left, diag))
-            return F.when(in_band, F.least(cost + mn, INF)) \
-                    .otherwise(INF)
-
-        return F.struct(p1.alias("p2"),
-                        F.transform(idx, cell).alias("p1"))
-
-    return F.aggregate(F.sequence(F.lit(0), F.lit(2 * n - 2)),
-                       init, step,
-                       lambda acc: F.element_at(acc.getField("p1"),
-                                                F.lit(n)))

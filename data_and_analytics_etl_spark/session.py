@@ -14,6 +14,7 @@ strategy per deployment.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -66,12 +67,17 @@ def default_parallelism() -> int:
 
 
 def apply_runtime_conf(spark: SparkSession) -> SparkSession:
-    """Apply the settable-any-time profile to an existing session."""
+    """Apply the settable-any-time profile to an existing session.
+
+    A key the host harness refuses (a locked conf) is reported with
+    ``warnings.warn`` and skipped; the remaining keys are still set.
+    """
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # conf locked by the host harness; keep going
+        except Exception as exc:
+            warnings.warn(f"runtime conf {k}={v} refused: {exc}",
+                          RuntimeWarning, stacklevel=2)
     return spark
 
 

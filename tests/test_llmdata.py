@@ -50,101 +50,6 @@ class TestMinHashLSH:
         assert out.filter(F.col("jaccard") < 0.5).count() == 0
 
 
-class TestPartitionTopk:
-    """_partition_topk (r14) must be a pure pre-filter: the rank window
-    over its output must equal the rank window over the FULL scored
-    set, including under adversarial cosines (NaN, NULL, ±inf, ties)
-    and under forced intermediate compaction."""
-
-    K = 3
-
-    @staticmethod
-    def _window(df, k):
-        from pyspark.sql import Window
-        w = Window.partitionBy("probe_id").orderBy(
-            F.desc("cosine"), F.asc("vec_id"))
-        return (df.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .select("probe_id", "vec_id", "cosine", "rank"))
-
-    @staticmethod
-    def _canon(rows):
-        import math
-        out = []
-        for r in rows:
-            c = r.cosine
-            if c is None:
-                c = "null"
-            elif math.isnan(c):
-                c = "nan"
-            out.append((r.probe_id, r.vec_id, c, r.rank))
-        return sorted(out, key=repr)
-
-    def _scored(self, spark):
-        import itertools
-        nan, inf = float("nan"), float("inf")
-        rows = []
-        vid = itertools.count()
-        # probe 1: plain values with a tie band straddling the k cut
-        for c in (0.9, 0.8, 0.8, 0.8, 0.7, 0.1):
-            rows.append((1, next(vid), c))
-        # probe 2: NaN outranks inf outranks finite; null sorts last
-        for c in (nan, inf, 0.5, None, -inf, nan):
-            rows.append((2, next(vid), c))
-        # probe 3: fewer than k rows
-        for c in (0.2, None):
-            rows.append((3, next(vid), c))
-        # probe 4: all-identical cosines (pure vec_id tiebreak)
-        for c in (0.42,) * 6:
-            rows.append((4, next(vid), c))
-        return spark.createDataFrame(
-            rows, "probe_id long, vec_id long, cosine double")
-
-    def test_window_identity_adversarial(self, spark):
-        from data_and_analytics_etl_spark.operators.similarity import (
-            _partition_topk)
-        scored = self._scored(spark).repartition(5)
-        full = self._canon(self._window(scored, self.K).collect())
-        red = self._canon(self._window(
-            _partition_topk(scored, self.K), self.K).collect())
-        assert red == full
-
-    def test_forced_incremental_compaction(self, spark, monkeypatch):
-        import data_and_analytics_etl_spark.operators.similarity as sim
-        # one partition + 2-row Arrow batches + a 4-row compaction
-        # trigger: the per-batch cascade must still keep every global
-        # top-k row (superset proof applied per compaction)
-        monkeypatch.setattr(sim, "PARTITION_TOPK_COMPACT_ROWS", 4)
-        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        old = spark.conf.get(key)
-        spark.conf.set(key, "2")
-        try:
-            scored = self._scored(spark).coalesce(1)
-            full = self._canon(self._window(scored, self.K).collect())
-            red = self._canon(self._window(
-                sim._partition_topk(scored, self.K), self.K).collect())
-            assert red == full
-        finally:
-            spark.conf.set(key, old)
-
-    def test_reduction_is_bounded(self, spark):
-        # 1000 corpus rows, 4 partitions, 2 probes: the reduced pair
-        # stream must be <= probes * k * partitions (no ties here)
-        from data_and_analytics_etl_spark.operators.similarity import (
-            _partition_topk)
-        rows = [(p, v, float(v % 997) / 997.0)
-                for p in (1, 2) for v in range(1000)]
-        scored = spark.createDataFrame(
-            rows, "probe_id long, vec_id long, cosine double") \
-            .repartition(4)
-        n = _partition_topk(scored, 5).count()
-        assert n <= 2 * 5 * 4
-        full = self._canon(self._window(scored, 5).collect())
-        red = self._canon(self._window(
-            _partition_topk(scored, 5), 5).collect())
-        assert red == full
-
-
 class TestSetSimPrefixJoin:
     """setsim_prefix_pairs must equal the all-pairs baseline EXACTLY —
     the prefix filter is a lossless candidate pruner, not a sketch."""

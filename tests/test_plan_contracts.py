@@ -171,8 +171,9 @@ def test_local_clustering_oriented_edges_are_materialized_once(
     closing join; its copies' exchanges are NOT identical, so AQE
     reuse cannot collapse them and the canonicalize->degree->2-join
     chain recomputed per consumer (sf1 decade A/B: 27.1 -> 9.8 s with
-    the persist; scripts/ab_lcc_persist.py). Pin the cache so a
-    refactor cannot silently reintroduce the triple recompute.
+    the persist; OPTIMIZATION_r14.md "V4 — the 13-15 s graph registry
+    rows"). Pin the cache so a refactor cannot silently reintroduce
+    the triple recompute.
     (triangle_count is deliberately NOT cached — its semi-join variant
     reuses exchanges already; persisting it measured slower.)"""
     df = REGISTRY["graph_local_clustering"].fn(spark, sf_dir)

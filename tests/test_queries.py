@@ -69,3 +69,31 @@ class TestHostileSessionConf:
         finally:
             for k, v in saved.items():
                 spark.conf.set(k, v)
+
+    def test_refused_conf_is_reported_and_the_rest_still_set(self):
+        """A host harness may lock a runtime key. apply_runtime_conf
+        must name the refused key in a warning and still set every
+        other key of the profile."""
+        from data_and_analytics_etl_spark.session import (
+            RUNTIME_CONF, apply_runtime_conf)
+        refused = "spark.sql.shuffle.partitions"
+
+        class LockedConf:
+            def __init__(self):
+                self.values = {}
+
+            def set(self, key, value):
+                if key == refused:
+                    raise RuntimeError("locked by the host harness")
+                self.values[key] = value
+
+        class StubSession:
+            conf = LockedConf()
+
+        session = StubSession()
+        with pytest.warns(RuntimeWarning, match=refused) as caught:
+            apply_runtime_conf(session)
+        assert len(caught) == 1
+        assert "locked by the host harness" in str(caught[0].message)
+        assert session.conf.values == {
+            k: v for k, v in RUNTIME_CONF.items() if k != refused}

@@ -299,3 +299,31 @@ def test_rotation_slot_floor():
         "tiers (bench + changed + new cohort) crowd the pool below "
         "the 15-slot floor; shrink the new-probe cohort or defer it "
         "to the next round's backlog")
+
+
+def test_every_probe_module_is_imported_by_the_package():
+    """A probe module that queries/__init__.py does not import registers
+    nothing: its probes and oracles never reach queries(), FULLVERIFY or
+    the driver, while its own tests keep the code looking alive. Every
+    module except the registry machinery must be imported."""
+    import ast
+    import os
+
+    import data_and_analytics_etl_spark.queries as pkg
+
+    pkg_dir = os.path.dirname(pkg.__file__)
+    with open(os.path.join(pkg_dir, "__init__.py")) as f:
+        tree = ast.parse(f.read())
+    imported = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.level == 1:
+            if node.module:
+                imported.add(node.module.split(".")[0])
+            else:
+                imported.update(a.name for a in node.names)
+    modules = {f[:-3] for f in os.listdir(pkg_dir)
+               if f.endswith(".py") and f != "__init__.py"}
+    unwired = sorted(modules - imported - {"registry", "fingerprint"})
+    assert not unwired, (
+        f"probe modules never imported by queries/__init__.py: {unwired} "
+        "— register them there or delete them")
